@@ -1,5 +1,4 @@
-"""Canonicalization: connected components over same-as edges + stable IRI
-minting.
+"""Canonicalization: connected components over same-as edges.
 
 Catalyst has no fixpoint operator (SURVEY.md §4), so connected components
 is the one genuinely iterative piece of the engine: min-label propagation
@@ -9,11 +8,12 @@ long before the data does). Convergence is detected with a count of
 changed labels. All randomness-free; label = lexicographic min vertex id,
 so results are deterministic at any parallelism.
 
-IRI minting follows the reference's rule shape
-(/root/reference/utils/location.py:88-98: a deterministic id computed from
-the entity key): here the canonical IRI is a hash of the component's full
-sorted member set, so it is stable under re-runs and insensitive to which
-member was the propagation winner.
+Only near-dup clustering runs it (``dedup.near_dup_clusters``,
+``plans.job.rebuild_near_dups``): verified pairs chain transitively and
+clusters genuinely merge. Entities do not need it — linking maps each
+surface to one canonical, and every canonical links to itself, so the
+same-as graph is a forest of stars and ``plans.pipeline.entity_rollup``
+groups by canonical instead.
 """
 
 from __future__ import annotations
@@ -36,8 +36,8 @@ def connected_components(
     entry), so "min" is the lexicographic min — '10' < '9'. Callers with
     numeric ids must zero-pad to a fixed width first if they rely on
     component == numeric min (``near_dup_clusters`` pads to 19 digits;
-    the entity-linking surfaces are natural strings, where lexicographic
-    min is the intended deterministic representative).
+    the resumable job's conversation ids are natural strings, where
+    lexicographic min is the intended deterministic representative).
 
     Algorithm: alternating large-star / small-star (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC'14 — public
@@ -146,37 +146,3 @@ def connected_components(
     )
     return comp.union(roots)
 
-
-def mint_component_iris(components: DataFrame, prefix: str = "kg:entity/") -> DataFrame:
-    """(vertex, component) -> (vertex, component, iri).
-
-    iri = prefix + sha1(sorted member set) — stable under re-runs and
-    independent of label-propagation tie-breaking.
-    """
-    member_sets = components.groupBy("component").agg(
-        F.sha1(
-            F.to_binary(
-                F.concat_ws("", F.sort_array(F.collect_set("vertex"))), F.lit("utf-8")
-            )
-        ).alias("__h")
-    )
-    return components.join(member_sets, "component").select(
-        "vertex",
-        "component",
-        F.concat(F.lit(prefix), F.col("__h")).alias("iri"),
-    )
-
-
-def sameas_edges_from_linking(linked: DataFrame, surface_col: str, canonical_col: str) -> DataFrame:
-    """Build the same-as edge set from linking output: every resolved
-    surface form is connected to its canonical entity key. Distinct pairs
-    only — corpus-size-independent (bounded by vocabulary)."""
-    return (
-        linked.select(
-            F.col(surface_col).cast("string").alias("src"),
-            F.col(canonical_col).cast("string").alias("dst"),
-        )
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )

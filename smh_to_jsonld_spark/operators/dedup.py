@@ -424,6 +424,15 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list:
     return rng.randn(n_planes, dim).tolist()
 
 
+def cosine_from_norms(dot, na, nb):
+    """dot / (na * nb), NULL when either norm is zero. The session runs
+    ANSI mode, where the bare division raises DIVIDE_BY_ZERO on an
+    all-zero vector; a NULL cosine never ranks and never passes a
+    threshold."""
+    den = na * nb
+    return F.when(den > 0, dot / den)
+
+
 def cosine_expr(a, b):
     """Exact cosine similarity of two array<float/double> columns —
     pure Catalyst (zip_with + aggregate), no UDF."""
@@ -432,7 +441,7 @@ def cosine_expr(a, b):
     )
     na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
     nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / (na * nb)
+    return cosine_from_norms(dot, na, nb)
 
 
 def embedding_neardup_pairs(
@@ -511,7 +520,7 @@ def embedding_neardup_pairs(
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
-        .withColumn("cosine", dot / (F.col("na") * F.col("nb")))
+        .withColumn("cosine", cosine_from_norms(dot, F.col("na"), F.col("nb")))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", F.round("cosine", 4).alias("cosine"))
     )

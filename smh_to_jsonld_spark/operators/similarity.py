@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from smh_to_jsonld_spark.functions import vecexpr
-from smh_to_jsonld_spark.operators.dedup import _hyperplanes
+from smh_to_jsonld_spark.operators.dedup import _hyperplanes, cosine_from_norms
 
 
 def _as_double(col):
@@ -28,11 +28,14 @@ def _checked_sides(frame: DataFrame, id_alias: str, vec_alias: str,
                    id_col: str, vec_col: str, dim: int):
     """(id, vec, norm) projection with the fail-loud dim guard applied
     ONCE PER ROW (r6, VERDICT r5 #2b — hoisted out of the per-pair CASE).
-    The norm is computed FROM the guarded vector (so a dim mismatch
-    raises the guard's error, never an ANSI index error) as the HOF
-    sqrt(aggregate(...)) — fold-order-identical to the unrolled squared
-    norm the old per-pair ``cosine_checked_sql`` denominator evaluated,
-    so downstream dot/(na*nb) is bit-identical to it."""
+    EVERY row is checked, so in the bucketed paths (lsh_topk/ivf_topk) a
+    wrong-dim vector raises even if it never joins a candidate pair —
+    a superset of the rows a per-pair check would see. The norm is computed
+    FROM the guarded vector (so a dim mismatch raises the guard's error,
+    never an ANSI index error) as the HOF sqrt(aggregate(...)) —
+    fold-order-identical to the unrolled squared norm the old per-pair
+    ``cosine_checked_sql`` denominator evaluated, so downstream
+    dot/(na*nb) is bit-identical to it."""
     v = _as_double(F.col(vec_col))
     checked = F.expr(vecexpr.checked_vec_sql("__v", dim))
     return (
@@ -57,7 +60,22 @@ def _pair_cosine(qv: str, cv: str, nq: str, nc: str):
     dot = F.expr(
         f"aggregate(zip_with({qv}, {cv}, (x, y) -> x * y), 0.0d, (p, q) -> p + q)"
     )
-    return dot / (F.col(nq) * F.col(nc))
+    return cosine_from_norms(dot, F.col(nq), F.col(nc))
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cosine) -> top-k per query as (query_id,
+    neighbor_id, rank, cosine); ties break on neighbor_id asc. Pairs with
+    a NULL cosine (a zero-norm vector on either side) are never ranked."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.filter(F.col("cosine").isNotNull())
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", F.round("cosine", 4).alias("cosine"))
+    )
 
 
 def _assign_sql(vec: str, cents: list) -> str:
@@ -140,14 +158,7 @@ def brute_force_topk(
         "neighbor_id",
         _pair_cosine("qv", "cv", "__n_qv", "__n_cv").alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 4).alias("cosine"))
-    )
+    return _rank_topk(scored, k)
 
 
 def lsh_topk(
@@ -193,14 +204,7 @@ def lsh_topk(
         "neighbor_id",
         _pair_cosine("qv", "cv", "__n_qv", "__n_cv").alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 4).alias("cosine"))
-    )
+    return _rank_topk(scored, k)
 
 
 def seeded_centroids(n_centroids: int, dim: int, seed: int) -> list:
@@ -274,14 +278,7 @@ def ivf_topk(
         "neighbor_id",
         _pair_cosine("qv", "cv", "__n_qv", "__n_cv").alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 4).alias("cosine"))
-    )
+    return _rank_topk(scored, k)
 
 
 def kmeans_update_once(corpus: DataFrame, centroids: list,

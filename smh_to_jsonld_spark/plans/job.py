@@ -88,7 +88,7 @@ def run_resumable_kg_job(
 
     result = kg_pipeline_from_transcripts(
         spark, subset, target_meta, diseases, dialect=dialect,
-        include_entities=False, fuzzy_blocking=fuzzy_blocking,
+        fuzzy_blocking=fuzzy_blocking,
     )
     lineage = {"input": lineage_note or "transcripts", "rounds": todo}
 
@@ -142,8 +142,8 @@ def run_resumable_kg_job(
     # prior rounds' entities (VERDICT r2 "what's wrong" #1). Now: per-round
     # surface counts go to a round-partitioned staging table (dynamic
     # partition overwrite, same crash contract as triples), and the global
-    # rollup is rebuilt from ALL committed partitions — with linking and
-    # the CC fixpoint memoized so only NEW surface forms pay for them.
+    # rollup is rebuilt from ALL committed partitions — with linking
+    # memoized so only NEW surface forms pay for it.
     entity_stats = rebuild_entities(
         spark, io, result["spotted"], conv_round, lineage,
         fuzzy_blocking=fuzzy_blocking,
@@ -232,7 +232,7 @@ def rebuild_near_dups(
       previous cluster representatives, components run over that
       contracted (new-edges-sized) graph, and prior members are relabeled
       through the resulting rep->rep mapping — this handles cluster
-      MERGES, which the star-shaped entities memo never needs. Cluster id
+      MERGES, which star-shaped entity grouping never needs. Cluster id
       = lexicographic min doc id over members (contraction preserves it:
       reps are their clusters' minima, so the min over merged reps IS the
       min over the merged membership), hence resumed == one-shot.
@@ -344,7 +344,7 @@ def rebuild_near_dups(
         # first commit OR healing a lost clusters table: the rollup is a
         # CACHE of the committed edge set — rebuild components over ALL
         # committed edges (this commit's write just completed the set),
-        # so a deleted neardup_clusters self-heals like the entity memos.
+        # so a deleted neardup_clusters self-heals like surface_links.
         # (exists-guard: a corpus with zero near-dups writes no edge files)
         all_edges = (
             io.read(spark, "neardup_edges") if io.exists(spark, "neardup_edges")
@@ -409,37 +409,28 @@ def rebuild_entities(
     - ``surface_links`` (surface, canonical) — memoized linking results.
       Linking is per-surface deterministic (fixed alias dictionary,
       total-order tie-break, link.py:94-104), so memoization cannot change
-      answers; only surfaces never seen before run the fuzzy pass.
-    - ``entity_components`` (vertex, component) — memoized CC labels. The
-      same-as graph is a forest of stars (each surface links to exactly
-      one canonical), so a new surface attaching to a known canonical
-      INHERITS its component label with a plain join; the iterative CC
-      fixpoint runs only over edges whose canonical is itself new. Healing:
-      pending work is derived from (all links) minus (labeled vertices),
-      not from this commit's delta, so a crash between memo writes is
-      repaired on retry.
+      answers; only surfaces never seen before run the fuzzy pass. The
+      memo is a cache: losing it re-links every surface on the next
+      commit.
     - ``entities`` (iri, canonical, surfaces, n_mentions) — the global
       rollup, rebuilt per commit from ALL partitions of surface_counts.
-      IRIs are minted from the ACTIVE member set (components filtered to
-      surfaces with nonzero counts), which makes the resumed table
-      row-identical to a one-shot build: star components stay connected
-      under leaf filtering, so membership — and hence the member-set-hash
-      IRI — matches exactly what a from-scratch CC over the active
-      vocabulary would produce.
+      Linking maps each surface to one canonical and every canonical
+      links to itself, so the same-as graph is a forest of stars and an
+      entity is one group by canonical (``entity_rollup``) — no
+      connected-components fixpoint. The IRI hashes the ACTIVE member set
+      (surfaces with nonzero counts plus their canonical), so the resumed
+      table is row-identical to a one-shot build.
 
     ``fuzzy_blocking`` must stay constant across a warehouse's commits:
     the surface_links memo caches per-surface answers, so switching the
-    blocking family requires deleting surface_links/entity_components
-    (they self-heal on the next commit). ENFORCED: the family is recorded
-    in the surface_links manifest and a mismatching commit raises before
-    touching any table.
+    blocking family requires deleting surface_links (it self-heals on the
+    next commit). ENFORCED: the family is recorded in the surface_links
+    manifest and a mismatching commit raises before touching any table.
 
-    Returns stats {n_surfaces, new_surfaces, cc_pending_edges,
-    cc_fixpoint_edges, n_entities} (recorded in the snapshot manifests; the
-    bounded-fixpoint test asserts cc_fixpoint_edges == new-canonical edges
-    on a resume commit).
+    Returns stats {n_surfaces, new_surfaces, cc_fixpoint_edges,
+    n_entities} (recorded in the snapshot manifests).
     """
-    from smh_to_jsonld_spark.operators import canon, link
+    from smh_to_jsonld_spark.operators import link
     from smh_to_jsonld_spark.plans.pipeline import (
         entity_rollup,
         link_surface_counts,
@@ -478,8 +469,7 @@ def rebuild_entities(
                 f"surface_links memo was built with {recorded!r}; mixed "
                 "families give inconsistent linking. Either rerun with "
                 f"--fuzzy-blocking {recorded}, or delete the surface_links"
-                " and entity_components tables (they self-heal on the next"
-                " commit)."
+                " table (it self-heals on the next commit)."
             )
     if io.exists(spark, "surface_links"):
         known_links = io.read(spark, "surface_links")
@@ -499,112 +489,18 @@ def rebuild_entities(
     io.write(all_links, "surface_links", mode="overwrite", lineage=lineage,
              metrics={"new_surfaces": n_new, "fuzzy_blocking": fuzzy_blocking})
 
-    # 4. component labels: inherit for stars around known canonicals, run
-    #    the CC fixpoint only on the truly-new subgraph
-    edges_all = canon.sameas_edges_from_linking(all_links, "surface", "canonical")
-    if io.exists(spark, "entity_components"):
-        known_comp = io.read(spark, "entity_components")
-        labeled = known_comp.select("vertex")
-        # pending = edges with ANY unlabeled endpoint (advice r3: deriving
-        # pending from unlabeled-src only silently dropped an edge whose
-        # src was labeled but dst was not — safe only while the forest-of-
-        # stars assumption holds; this derivation doesn't depend on it)
-        pending = edges_all.join(
-            edges_all.join(labeled.withColumnRenamed("vertex", "src"), "src", "left_semi")
-            .join(labeled.withColumnRenamed("vertex", "dst"), "dst", "left_semi")
-            .select("src", "dst"),
-            ["src", "dst"],
-            "left_anti",
-        ).localCheckpoint(eager=True)
-        # one labeled endpoint: the other inherits its component label
-        k_src = known_comp.select(
-            F.col("vertex").alias("src"), F.col("component").alias("c_src")
-        )
-        k_dst = known_comp.select(
-            F.col("vertex").alias("dst"), F.col("component").alias("c_dst")
-        )
-        half = pending.join(k_src, "src", "left").join(k_dst, "dst", "left")
-        attach = (
-            half.filter(F.col("c_src").isNotNull() | F.col("c_dst").isNotNull())
-            .select(
-                F.when(F.col("c_src").isNull(), F.col("src"))
-                .otherwise(F.col("dst"))
-                .alias("vertex"),
-                F.coalesce("c_src", "c_dst").alias("component"),
-            )
-            .distinct()
-        )
-        # both endpoints unlabeled: genuinely new subgraph, run the fixpoint
-        residual = (
-            half.filter(F.col("c_src").isNull() & F.col("c_dst").isNull())
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
-        )
-    else:
-        known_comp = None
-        pending = edges_all.localCheckpoint(eager=True)
-        attach = None
-        residual = pending
-    n_pending = pending.count()
-    n_fixpoint = residual.count()
-    comp_new = canon.connected_components(residual).select("vertex", "component")
-    if attach is not None:
-        comp_new = comp_new.unionByName(attach)
-    comp_all = (
-        known_comp.unionByName(comp_new) if known_comp is not None else comp_new
-    ).localCheckpoint(eager=True)
-    # Invariants (vocab-sized checks, advice r3): (a) one label per vertex
-    # — an attach/fixpoint collision means the star assumption broke; (b)
-    # no same-as edge spans two components — that would need a merge the
-    # memoized path cannot express. Fail loudly instead of letting the
-    # table silently diverge from a one-shot build.
-    if comp_all.groupBy("vertex").count().filter("count > 1").limit(1).count():
-        raise RuntimeError(
-            "entity_components invariant broken: a vertex received multiple "
-            "component labels (same-as graph is no longer a forest of stars);"
-            " delete surface_links/entity_components to rebuild from scratch"
-        )
-    lab = comp_all
-    spans = (
-        edges_all.join(
-            lab.select(F.col("vertex").alias("src"), F.col("component").alias("c1")),
-            "src",
-        )
-        .join(
-            lab.select(F.col("vertex").alias("dst"), F.col("component").alias("c2")),
-            "dst",
-        )
-        .filter(F.col("c1") != F.col("c2"))
+    # 4. roll up the global entity table: one entity per canonical
+    entities = entity_rollup(counts.join(all_links, "surface")).localCheckpoint(
+        eager=True
     )
-    if spans.limit(1).count():
-        raise RuntimeError(
-            "entity_components invariant broken: a same-as edge spans two "
-            "components (incremental labels would need a merge); delete "
-            "surface_links/entity_components to rebuild from scratch"
-        )
-    io.write(comp_all, "entity_components", mode="overwrite", lineage=lineage,
-             metrics={"cc_pending_edges": n_pending,
-                      "cc_fixpoint_edges": n_fixpoint})
-
-    # 5. mint IRIs from ACTIVE membership; roll up the global entity table
-    linked_active = counts.join(all_links, "surface")
-    active_edges = canon.sameas_edges_from_linking(
-        linked_active, "surface", "canonical"
-    )
-    active_vertices = (
-        active_edges.select(F.col("src").alias("vertex"))
-        .union(active_edges.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
-    iris = canon.mint_component_iris(comp_all.join(active_vertices, "vertex"))
-    entities = entity_rollup(linked_active, iris).localCheckpoint(eager=True)
     n_entities = entities.count()
     io.write(entities, "entities", mode="overwrite", lineage=lineage,
              metrics={"n_entities": n_entities})
     return {
         "n_surfaces": counts.count(),
         "new_surfaces": n_new,
-        "cc_pending_edges": n_pending,
-        "cc_fixpoint_edges": n_fixpoint,
+        # no edges enter a fixpoint; the key stays because the traced
+        # benchmark (perfbench/run.py) reports it
+        "cc_fixpoint_edges": 0,
         "n_entities": n_entities,
     }

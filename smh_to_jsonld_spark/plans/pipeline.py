@@ -146,7 +146,6 @@ def kg_pipeline_from_transcripts(
     target_meta: DataFrame,
     diseases: DataFrame,
     dialect: str = "v6",
-    include_entities: bool = False,
     fuzzy_blocking: str = "prefix",
 ) -> dict:
     """The full triple factory over the authoritative input table
@@ -176,10 +175,6 @@ def kg_pipeline_from_transcripts(
     result["conv_wide"] = core["conv_wide"]
     result["facts"] = facts
     result["spotted"] = core["spotted"]
-    if include_entities:
-        # opt-in: the CC fixpoint inside entity_graph runs EAGER count()
-        # iterations; only the materializing job should pay for it
-        result["entities"] = entity_graph(spark, core["spotted"])
     return result
 
 
@@ -202,23 +197,29 @@ def link_surface_counts(
     )
 
 
-def entity_rollup(linked: DataFrame, iris: DataFrame) -> DataFrame:
-    """(surface, canonical, count) x (vertex, iri) -> the canonical entity
-    table (iri, canonical, surfaces array, n_mentions). Unlinked canonicals
-    (surface form == canonical, no same-as edge) fall back to a
-    content-hash IRI — the reference's miss-still-emits contract."""
-    with_iri = linked.join(
-        iris.select(F.col("vertex").alias("canonical"), "iri"),
-        "canonical",
-        "left",
-    ).withColumn(
-        "iri",
-        F.coalesce(F.col("iri"), F.concat(F.lit("kg:entity/"), F.sha1(F.to_binary(F.col("canonical"), F.lit("utf-8"))))),
+def entity_rollup(linked: DataFrame) -> DataFrame:
+    """(surface, canonical, count) -> the canonical entity table (iri,
+    canonical, surfaces array, n_mentions).
+
+    Linking is a function surface -> canonical, and every canonical that
+    can occur as a normalized surface links to itself, so the same-as
+    graph is a forest of stars: an entity is one canonical plus the
+    surfaces linked to it, i.e. one group by canonical. The IRI hashes
+    the sorted member set {canonical} ∪ surfaces, joined by \\x01 — stable
+    under re-runs; a canonical with no other surface hashes to
+    sha1(canonical) (the reference's miss-still-emits contract)."""
+    members = F.array_sort(F.array_union(F.array("canonical"), F.col("surfaces")))
+    iri = F.concat(
+        F.lit("kg:entity/"),
+        F.sha1(F.to_binary(F.concat_ws("\x01", members), F.lit("utf-8"))),
     )
-    return with_iri.groupBy("iri").agg(
-        F.first("canonical").alias("canonical"),
-        F.sort_array(F.collect_set("surface")).alias("surfaces"),
-        F.sum("count").alias("n_mentions"),
+    return (
+        linked.groupBy("canonical")
+        .agg(
+            F.sort_array(F.collect_set("surface")).alias("surfaces"),
+            F.sum("count").alias("n_mentions"),
+        )
+        .select(iri.alias("iri"), "canonical", "surfaces", "n_mentions")
     )
 
 
@@ -229,25 +230,20 @@ def entity_graph(spark: SparkSession, spotted: DataFrame) -> DataFrame:
     1. salted mention counts per surface form (head entities like 'US'
        dominate — the skew path, link.salted_count);
     2. exact + fuzzy alias resolution over the DISTINCT surface vocabulary;
-    3. same-as edges (surface <-> canonical) -> connected components
-       (checkpointed fixpoint) -> member-set-hash IRIs (canon module).
+    3. group by canonical -> member-set-hash IRIs (entity_rollup).
 
     Returns (iri, canonical, surfaces array, n_mentions). The resumable
     job uses the incremental variant (plans.job.rebuild_entities) which
-    memoizes linking + components so only NEW surface forms pay the CC
-    fixpoint per commit.
+    memoizes linking so only NEW surface forms pay the fuzzy pass per
+    commit.
     """
-    from smh_to_jsonld_spark.operators import canon, link
+    from smh_to_jsonld_spark.operators import link
 
     ents = spotted.filter(F.col("kind") == "entity").select(
         link.normalize_surface(F.col("term")).alias("surface")
     )
     counts = link.salted_count(ents, ["surface"], salt_buckets=16)
-    linked = link_surface_counts(spark, counts)
-    edges = canon.sameas_edges_from_linking(linked, "surface", "canonical")
-    cc = canon.connected_components(edges)
-    iris = canon.mint_component_iris(cc)
-    return entity_rollup(linked, iris)
+    return entity_rollup(link_surface_counts(spark, counts))
 
 
 def turn_order_check(transcripts: DataFrame) -> int:

@@ -22,6 +22,17 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def default_driver_memory() -> str:
+    """16g, capped at half the host's physical memory: a fixed 16g heap
+    on a 15 GiB host lets the local-mode JVM grow until the kernel kills
+    it."""
+    try:
+        host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (AttributeError, ValueError, OSError):  # no sysconf (Windows)
+        return "16g"
+    return f"{min(16 * 1024, host_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "smh_to_jsonld_spark",
     master: str | None = None,
@@ -58,10 +69,14 @@ def get_spark(
         # its heap must cover cores x per-task working set. 8g at 32
         # threads over the sf1.0 tables ran GC-bound (measured r6: the
         # full bench session inflated small queries ~2x vs isolated runs;
-        # 16g restores isolated-run latencies). Env-overridable; on a
-        # real cluster executor memory comes from the cluster manager and
-        # this setting only sizes the (thin) driver.
-        .config("spark.driver.memory", os.environ.get("SMHKG_DRIVER_MEM", "16g"))
+        # 16g restores isolated-run latencies), capped at half the host's
+        # memory. Env-overridable; on a real cluster executor memory
+        # comes from the cluster manager and this setting only sizes the
+        # (thin) driver.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SMHKG_DRIVER_MEM") or default_driver_memory(),
+        )
         # local-mode JVM flags (e.g. GC choice) — at 32 threads in ONE JVM
         # the collector is a shared resource a real per-executor-JVM
         # cluster doesn't contend on; see BENCH/BASELINE.md

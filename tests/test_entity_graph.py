@@ -1,4 +1,7 @@
-"""Entity graph: spotting -> linking -> CC -> IRIs, end to end."""
+"""Entity graph: spotting -> linking -> group by canonical -> IRIs, end to
+end."""
+
+import hashlib
 
 from pyspark.sql import functions as F
 
@@ -24,6 +27,13 @@ def test_entity_graph_clusters_surface_forms(spark, spec):
     assert len(iris) == len(set(iris))
     again = {r.canonical: r.iri for r in entity_graph(spark, spotted).collect()}
     assert {c: r.iri for c, r in rows.items()} == again
+
+    # IRI = sha1 over the sorted member set {canonical} ∪ surfaces, joined
+    # by \x01 — fixed values, so a change to the IRI rule shows here
+    for c in ("06", "US"):
+        r = rows[c]
+        members = "\x01".join(sorted({r.canonical, *r.surfaces}))
+        assert r.iri == "kg:entity/" + hashlib.sha1(members.encode()).hexdigest()
 
 
 def test_mentions_and_spotting_at_scale(spark):

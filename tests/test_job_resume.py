@@ -58,12 +58,10 @@ def test_resumable_job_and_snapshots(spark, spec, tmp_path):
     assert round_a_entities <= {e[0] for e in resumed}
     # ... and the resumed table is row-identical to the one-shot build
     assert resumed == key(io.read(spark, "entities"))
-    # incremental maintenance: the resume commit's CC fixpoint ran only on
-    # edges of surface forms never seen before, not the full vocabulary
+    # incremental maintenance: the resume commit linked only surface forms
+    # never seen before, not the full vocabulary
     sA, sB = mA["metrics"]["entities"], m3["metrics"]["entities"]
     assert sB["new_surfaces"] < sA["n_surfaces"]
-    assert sB["cc_pending_edges"] <= sB["new_surfaces"]
-    assert sB["cc_fixpoint_edges"] <= sB["cc_pending_edges"]
 
     # near-dup clustering is ALSO incrementally maintained (VERDICT r3 #3):
     # the resumed cluster table equals the one-shot build row-for-row ...
@@ -87,10 +85,10 @@ def test_resumable_job_and_snapshots(spark, spec, tmp_path):
 
 
 def test_entities_memo_self_heal(spark, spec, tmp_path):
-    """The linking/CC memo tables are CACHES: losing them between commits
+    """The surface_links memo is a CACHE: losing it between commits
     (crash after partial write, manual cleanup) must not change the
-    entities table — pending work is re-derived from all-links minus
-    labeled-vertices, so a resume commit rebuilds what's missing."""
+    entities table — a resume commit re-links every surface it no longer
+    finds in the memo."""
     import shutil
 
     tr = synth.transcripts_df(spark, spec)
@@ -110,7 +108,6 @@ def test_entities_memo_self_heal(spark, spec, tmp_path):
     run_resumable_kg_job(spark, tr.filter(F.col("conv_id").isin(r1_convs)), tm, dz, io)
     # lose the memo/rollup tables between commits (neardup_clusters is a
     # cache of the committed neardup_edges set, same healing contract)
-    shutil.rmtree(io.table_path("entity_components"))
     shutil.rmtree(io.table_path("surface_links"))
     shutil.rmtree(io.table_path("neardup_clusters"))
     m = run_resumable_kg_job(spark, tr, tm, dz, io)
@@ -137,7 +134,7 @@ def _dup_conv_rows(conv_id, round_id, tokens):
 
 
 def test_near_dup_cross_commit_cluster_merge(spark, spec, tmp_path):
-    """The incremental path's hard case, which the entities memo never
+    """The incremental path's hard case, which entity grouping never
     hits: a LATER commit's doc bridges two clusters formed by an EARLIER
     commit — contraction must merge them, and the resumed table must
     equal a one-shot build over the same corpus.
@@ -216,7 +213,6 @@ def test_fuzzy_blocking_family_pinned_per_warehouse(spark, spec, tmp_path):
     # the snapshot log lives under the table path, so the recorded family
     # resets with the data
     shutil.rmtree(io.table_path("surface_links"))
-    shutil.rmtree(io.table_path("entity_components"))
     assert not io.snapshots("surface_links")
     m = run_resumable_kg_job(spark, tr, tm, dz, io, fuzzy_blocking="minhash")
     assert m["metrics"]["entities"]["n_entities"] > 0

@@ -304,6 +304,34 @@ def test_brute_force_topk_dim_mismatch_fails_loudly(spark):
         similarity.brute_force_topk(corpus, queries, k=2, dim=16).collect()
 
 
+def test_zero_norm_vectors_get_no_cosine(spark):
+    """Under ANSI mode dot/(na*nb) raised DIVIDE_BY_ZERO on an all-zero
+    vector. Its cosine is now NULL: never ranked, never a near-dup."""
+    rows = [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [0.6, 0.8])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    q0, q1 = df.filter(F.col("vec_id") == 0), df.filter(F.col("vec_id") == 1)
+
+    got = similarity.brute_force_topk(df, q0, k=3, dim=2).collect()
+    assert [(r.neighbor_id, r.rank) for r in got] == [(0, 1), (2, 2)]
+    assert similarity.brute_force_topk(df, q1, k=3, dim=2).collect() == []
+    lsh = similarity.lsh_topk(df, q0, k=3, dim=2, n_planes=2).collect()
+    assert 1 not in {r.neighbor_id for r in lsh}
+    cents = similarity.seeded_centroids(2, 2, seed=7)
+    ivf = similarity.ivf_topk(df, q0, cents, k=3, nprobe=2).collect()
+    assert [(r.neighbor_id, r.rank) for r in ivf] == [(0, 1), (2, 2)]
+
+    # two zero vectors share every LSH bucket; their pair must not verify
+    dups = df.unionByName(
+        spark.createDataFrame([(3, [0.0, 0.0])], "vec_id long, embedding array<float>")
+    )
+    pairs = dedup.embedding_neardup_pairs(dups, threshold=0.0, n_planes=2, dim=2)
+    assert (1, 3) not in {(r.id_a, r.id_b) for r in pairs.collect()}
+    cos = dups.select(
+        dedup.cosine_expr(F.col("embedding"), F.col("embedding")).alias("c")
+    ).collect()
+    assert sum(r.c is None for r in cos) == 2
+
+
 def test_lsh_topk_recall_on_testdata(spark):
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     queries = e.filter(F.col("vec_id") < 5)
